@@ -65,20 +65,27 @@ def extract_features(blobs: DataFrame) -> DataFrame:
 
     Features are deterministic pure-Python (hashlib) so the DuckDB oracle
     can verify the full plumbing; a real pipeline would compute pixels /
-    spectrograms here with identical structure.
+    spectrograms here with identical structure.  A NULL payload yields
+    a row with NULL feature columns, as in :func:`blob_features_and_frames`.
     """
 
     def featurize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            blobs_col = pdf["blob"]
+            payloads = [None if b is None else bytes(b) for b in pdf["blob"]]
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
-                    "n_bytes": blobs_col.map(len).astype("int64"),
-                    "content_md5": blobs_col.map(
-                        lambda b: hashlib.md5(bytes(b)).hexdigest()
+                    "n_bytes": pd.array(
+                        [None if p is None else len(p) for p in payloads],
+                        dtype="Int64",
                     ),
-                    "head_hex": blobs_col.map(lambda b: bytes(b)[:8].hex()),
+                    "content_md5": [
+                        None if p is None else hashlib.md5(p).hexdigest()
+                        for p in payloads
+                    ],
+                    "head_hex": [
+                        None if p is None else p[:8].hex() for p in payloads
+                    ],
                 }
             )
 
@@ -384,12 +391,14 @@ def sample_frames(blobs: DataFrame, every: int = 4) -> DataFrame:
     "decoded" to a per-frame content hash ``md5(payload || ':' || idx)``
     (one definition: :func:`walk_stub_frames`).  One output row per
     sampled frame — the row-exploding batch shape a real ffmpeg-based
-    sampler produces."""
+    sampler produces.  A NULL payload has no frames."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = {"doc_id": [], "n_frames": [], "frame_idx": [], "frame_md5": []}
             for doc_id, b in zip(pdf["doc_id"], pdf["blob"]):
+                if b is None:
+                    continue
                 for n, idx, fmd5 in walk_stub_frames(bytes(b), every):
                     out["doc_id"].append(doc_id)
                     out["n_frames"].append(n)

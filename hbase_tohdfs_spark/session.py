@@ -13,6 +13,21 @@ import os
 from pyspark.sql import SparkSession
 
 
+def graft_cpus() -> int:
+    """Core count from ``$SPARK_GRAFT_CPUS`` (default 32).  ``*`` means
+    every core of this host, as in ``local[*]``; anything else that is
+    not a positive integer raises ``ValueError`` instead of falling back
+    to a silent default."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    if raw == "*":
+        return os.cpu_count() or 1
+    if raw.isdigit() and int(raw) > 0:
+        return int(raw)
+    raise ValueError(
+        f"SPARK_GRAFT_CPUS must be a positive integer or '*', got {raw!r}"
+    )
+
+
 def get_spark(
     app_name: str = "hbase_tohdfs_spark",
     master: str | None = None,
@@ -21,15 +36,15 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-sane defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
-    On a real cluster, pass ``master=None`` with a pre-configured
-    spark-submit and these conf values simply confirm the defaults.
+    ``master`` defaults to ``local[N]`` and ``shuffle_partitions`` to
+    ``N``, with ``N`` from :func:`graft_cpus`.  On a real cluster, pass
+    ``master=None`` with a pre-configured spark-submit and these conf
+    values simply confirm the defaults.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
-        master = f"local[{cpus}]"
+        master = f"local[{graft_cpus()}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = graft_cpus()
 
     builder = (
         SparkSession.builder.appName(app_name)

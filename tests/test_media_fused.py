@@ -68,9 +68,13 @@ def test_render_video_frames_matches_staged(docs):
     _assert_same_rows(staged, fused)
 
 
-def test_blob_features_and_frames_matches_staged_union(docs):
+def test_blob_features_and_frames_matches_staged_union(spark, docs):
     from pyspark.sql import functions as F
 
+    # a NULL-text doc: features row with NULL payload columns, no frames
+    docs = docs.unionByName(
+        spark.createDataFrame([(7, None)], "doc_id: long, text: string")
+    )
     blobs = multimodal.attach_blob(docs)
     feats = multimodal.extract_features(blobs).select(
         "doc_id",
