@@ -14,11 +14,11 @@ from pyspark.sql import SparkSession
 
 
 def graft_cpus() -> int:
-    """Core count from ``$SPARK_GRAFT_CPUS`` (default 32).  ``*`` means
+    """Core count from ``$SPARK_GRAFT_CPUS``.  Unset or ``*`` means
     every core of this host, as in ``local[*]``; anything else that is
     not a positive integer raises ``ValueError`` instead of falling back
     to a silent default."""
-    raw = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if raw == "*":
         return os.cpu_count() or 1
     if raw.isdigit() and int(raw) > 0:

@@ -7,11 +7,12 @@ the suite stays fast; tools/check_oracle.py covers sf0.01.
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hbase_tohdfs_spark.queries import REGISTRY
 from tools.check_oracle import compare, duck_connection

@@ -11,10 +11,20 @@ from hbase_tohdfs_spark.session import graft_cpus
 
 @pytest.mark.parametrize(
     "raw, expected",
-    [("4", 4), ("*", os.cpu_count()), ("x", None), ("", None), ("0", None)],
+    [
+        ("4", 4),
+        ("*", os.cpu_count()),
+        (None, os.cpu_count()),
+        ("x", None),
+        ("", None),
+        ("0", None),
+    ],
 )
 def test_graft_cpus(monkeypatch, raw, expected):
-    monkeypatch.setenv("SPARK_GRAFT_CPUS", raw)
+    if raw is None:
+        monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    else:
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", raw)
     if expected is None:
         with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
             graft_cpus()

@@ -12,9 +12,10 @@ Usage: python tools/ann_recall.py [sf_dir] [k]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def recall_at_k(exact_df, approx_df, k: int) -> float:

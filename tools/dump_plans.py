@@ -10,9 +10,11 @@ Usage: python tools/dump_plans.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 STREAMING = {"stream_hourly_rollup", "stream_last_event_by_user", "stream_lww_custom_state"}
 
@@ -23,8 +25,6 @@ def main() -> None:
     # Keep operator plans lazy: pipeline ops otherwise materialize their
     # (small) results eagerly to release caches, which would reduce their
     # dumped plan to a post-materialization RDD scan.
-    import os
-
     os.environ["SPARK_GRAFT_LAZY_PLANS"] = "1"
 
     from hbase_tohdfs_spark.plans.inspect import plan_facts
@@ -80,7 +80,7 @@ def main() -> None:
         "forbidding broadcast.",
         "",
     ]
-    with open("/root/repo/PLANS.md", "w", encoding="utf-8") as fh:
+    with open(os.path.join(REPO, "PLANS.md"), "w", encoding="utf-8") as fh:
         fh.write("\n".join(lines))
     print("wrote PLANS.md")
 

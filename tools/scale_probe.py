@@ -14,7 +14,7 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def probe_bloom(spark) -> dict:
@@ -166,224 +166,6 @@ def probe_ngram(spark, n_docs: int) -> dict:
         "pairs_out": n_pairs,
         "operator_sec": round(op_sec, 2),
         "pairs_per_sec": int(stats["cand_capped"] / op_sec),
-    }
-
-
-def probe_ngram_ab(spark, n_docs: int, rounds: int = 2) -> dict:
-    """r8-verdict task 1: measure what each SSJoin pruning buys at 1M
-    docs on a LENGTH-VARIED corpus (the regime where the size-ratio and
-    prefix bounds actually bite — real web corpora are heavy-tailed in
-    length; the uniform-length probe_ngram corpus can't show this).
-
-    Corpus: 5%% planted exact dups, 2 boilerplate tokens (df-cap food),
-    4..28 content tokens per doc from a 400k vocabulary.  Measures the
-    CANDIDATE volume (the index join's real output before verification)
-    for plain / plain+length / prefix / prefix+length, plus interleaved
-    min-of-N operator wall for plain vs plain+length (only the ratio is
-    host-noise-safe), and asserts all variants emit the same pair count.
-    """
-    from pyspark.sql import functions as F
-
-    from hbase_tohdfs_spark.operators import dedup
-    from hbase_tohdfs_spark.operators.text import shingle_docs
-
-    threshold = 0.5
-    n_uniq = n_docs - n_docs // 20
-    docs = spark.range(n_docs).selectExpr(
-        "id as doc_id", f"pmod(id, {n_uniq}) as src"
-    ).selectExpr(
-        "doc_id",
-        # varied length: 4 + hash(src) % 25 content tokens -> 4..28
-        "concat_ws(' ', 'the', 'data', transform("
-        " sequence(0, 3 + pmod(hash(src, 11), 25)), i ->"
-        " concat('w', pmod(hash(src * 13 + 7, i), 400000)))) as text",
-    )
-
-    # ---- candidate counts: mirror the operator's posting construction
-    sets = (
-        shingle_docs(docs, 2)
-        .filter(F.size("sh") > 0)
-        .select("doc_id", F.array_distinct("sh").alias("shset"))
-    )
-    postings = sets.select(
-        "doc_id", F.size("shset").alias("n_full"), F.explode("shset").alias("s")
-    )
-    dfc = postings.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
-    postings = postings.join(
-        dfc.filter(F.col("df") <= dedup.NGRAM_MAX_DF), "s"
-    ).persist()
-
-    def join_count(frame, with_length: bool) -> int:
-        a, b = frame.alias("a"), frame.alias("b")
-        cond = (F.col("a.s") == F.col("b.s")) & (
-            F.col("a.doc_id") < F.col("b.doc_id")
-        )
-        if with_length:
-            cond = cond & (
-                F.least(F.col("a.n_full"), F.col("b.n_full"))
-                >= F.lit(threshold - 5e-5)
-                * F.greatest(F.col("a.n_full"), F.col("b.n_full"))
-            )
-        return a.join(b, cond).count()
-
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("doc_id").orderBy("df", "s")
-    ranked = postings.select(
-        "doc_id",
-        "n_full",
-        "s",
-        F.row_number().over(w).alias("rnk"),
-        F.count(F.lit(1)).over(Window.partitionBy("doc_id")).alias("n_rare"),
-    )
-    prefix = ranked.filter(
-        F.col("rnk")
-        <= F.col("n_rare")
-        - F.ceil(F.lit(threshold) * F.col("n_full") - F.lit(1e-9))
-        + 1
-    ).select("doc_id", "n_full", "s").persist()
-
-    cand = {
-        "plain": join_count(postings, False),
-        "plain_length": join_count(postings, True),
-        "prefix": join_count(prefix, False),
-        "prefix_length": join_count(prefix, True),
-    }
-    prefix.unpersist()
-    postings.unpersist()
-
-    # ---- interleaved operator wall: plain vs plain+length
-    walls: dict[str, list[float]] = {"filter_off": [], "filter_on": []}
-    pairs_out: dict[str, int] = {}
-    for _ in range(rounds):
-        for key, lf in (("filter_off", False), ("filter_on", True)):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            n = dedup.ngram_jaccard_pairs(
-                docs, k=2, threshold=threshold, length_filter=lf
-            ).count()
-            walls[key].append(round(time.perf_counter() - t0, 2))
-            pairs_out[key] = n
-    assert pairs_out["filter_off"] == pairs_out["filter_on"], pairs_out
-    return {
-        "probe": f"ngram_ab_{n_docs}",
-        "n_docs": n_docs,
-        "threshold": threshold,
-        "candidates": cand,
-        "length_cut": round(1 - cand["plain_length"] / max(cand["plain"], 1), 4),
-        "prefix_cut": round(1 - cand["prefix"] / max(cand["plain"], 1), 4),
-        "both_cut": round(
-            1 - cand["prefix_length"] / max(cand["plain"], 1), 4
-        ),
-        "pairs_out": pairs_out["filter_on"],
-        "wall_filter_off": walls["filter_off"],
-        "wall_filter_on": walls["filter_on"],
-        "ratio_min_on_over_off": round(
-            min(walls["filter_on"]) / min(walls["filter_off"]), 3
-        ),
-    }
-
-
-def probe_ngram_hash_ab(spark, n_docs: int, rounds: int = 3) -> dict:
-    """r9 continuation: poly-hashed shingles vs string shingles for the
-    plain inverted-index ngram-Jaccard path (the winnowing r9 map-side
-    form applied to the SSJoin family).  Same length-varied corpus as
-    probe_ngram_ab; interleaved min-of-N operator wall (only the ratio
-    is host-noise-safe); pair sets asserted identical via count plus an
-    order-independent pair checksum."""
-    from pyspark.sql import functions as F
-
-    from hbase_tohdfs_spark.operators import dedup
-
-    threshold = 0.5
-    n_uniq = n_docs - n_docs // 20
-    docs = spark.range(n_docs).selectExpr(
-        "id as doc_id", f"pmod(id, {n_uniq}) as src"
-    ).selectExpr(
-        "doc_id",
-        "concat_ws(' ', 'the', 'data', transform("
-        " sequence(0, 3 + pmod(hash(src, 11), 25)), i ->"
-        " concat('w', pmod(hash(src * 13 + 7, i), 400000)))) as text",
-    )
-
-    walls: dict[str, list[float]] = {"str": [], "poly": []}
-    sums: dict[str, tuple] = {}
-    for _ in range(rounds):
-        for fam in ("str", "poly"):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            agg = (
-                dedup.ngram_jaccard_pairs(
-                    docs, k=2, threshold=threshold, shingle_hash=fam
-                )
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.sum(F.hash("doc_id_a", "doc_id_b")).alias("chk"),
-                )
-                .collect()[0]
-            )
-            walls[fam].append(round(time.perf_counter() - t0, 2))
-            sums[fam] = (agg["n"], agg["chk"])
-    assert sums["str"] == sums["poly"], sums
-    return {
-        "probe": f"ngram_hash_ab_{n_docs}",
-        "n_docs": n_docs,
-        "threshold": threshold,
-        "pairs_out": sums["poly"][0],
-        "wall_str": walls["str"],
-        "wall_poly": walls["poly"],
-        "ratio_min_poly_over_str": round(
-            min(walls["poly"]) / min(walls["str"]), 3
-        ),
-    }
-
-
-def probe_minhash_hash_ab(spark, n_docs: int, rounds: int = 3) -> dict:
-    """r9 continuation: poly-hashed vs string shingles for the full
-    MinHash+LSH+verify pipeline (same trade the ngram_hash_ab probe
-    measures for the SSJoin family, plus MinHash's own term: the str
-    family pays one md5 per SHINGLE STRING, poly one md5 per TOKEN —
-    ~k x fewer hashed bytes, no shingle string).  Pair OUTPUT differs
-    between families only via LSH bucketing luck, so this asserts the
-    planted exact dups (jaccard 1.0 — always bucketed together) are
-    found by both; walls are interleaved min-of-N, ratio-only."""
-    from pyspark.sql import functions as F
-
-    from hbase_tohdfs_spark.operators import dedup
-
-    n_uniq = n_docs - n_docs // 20
-    docs = spark.range(n_docs).selectExpr(
-        "id as doc_id", f"pmod(id, {n_uniq}) as src"
-    ).selectExpr(
-        "doc_id",
-        "concat_ws(' ', 'the', 'data', transform(sequence(0, 9), i ->"
-        " concat('w', pmod(hash(src * 13 + 7, i), 400000)))) as text",
-    )
-    walls: dict[str, list[float]] = {"str": [], "poly": []}
-    exact: dict[str, int] = {}
-    for _ in range(rounds):
-        for fam in ("str", "poly"):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            n = (
-                dedup.minhash_dedup_pairs(
-                    docs, k=3, threshold=0.8, shingle_hash=fam
-                )
-                .filter(F.col("jaccard") == 1.0)
-                .count()
-            )
-            walls[fam].append(round(time.perf_counter() - t0, 2))
-            exact[fam] = n
-    assert exact["str"] == exact["poly"] == n_docs // 20, exact
-    return {
-        "probe": f"minhash_hash_ab_{n_docs}",
-        "n_docs": n_docs,
-        "planted_exact_pairs_found": exact["poly"],
-        "wall_str": walls["str"],
-        "wall_poly": walls["poly"],
-        "ratio_min_poly_over_str": round(
-            min(walls["poly"]) / min(walls["str"]), 3
-        ),
     }
 
 
@@ -545,111 +327,6 @@ def probe_simhash_wide_growth(
     return out
 
 
-def _simhash_pairs_r11_order(docs, max_hamming: int):
-    """The r11 simhash pairs pipeline (distinct on the candidate rows
-    BEFORE the hamming verify), hard-coded as the A/B control arm the
-    same way _components_loop_r11 preserves the r11 loop."""
-    from pyspark.sql import functions as F
-
-    from hbase_tohdfs_spark.operators import cacheutil, dedup
-
-    s = dedup.simhash(docs).persist()
-    chunks = s.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk_idx"),
-                        F.expr(
-                            f"cast(shiftright(simhash, {c * 15}) & 32767L as int)"
-                        ).alias("chunk"),
-                    )
-                    for c in range(4)
-                ]
-            )
-        ).alias("cc"),
-    ).select("doc_id", "simhash", "cc.chunk_idx", "cc.chunk")
-    chunks = cacheutil.fanout_repartition(chunks, "chunk_idx", "chunk")
-    a, b = chunks.alias("a"), chunks.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.chunk_idx") == F.col("b.chunk_idx"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_id_a"),
-            F.col("b.doc_id").alias("doc_id_b"),
-            F.col("a.simhash").alias("sa"),
-            F.col("b.simhash").alias("sb"),
-        )
-        .distinct()
-    )
-    hamming = F.expr("bit_count(sa ^ sb)")
-    pairs = cand.select(
-        "doc_id_a", "doc_id_b", hamming.alias("hamming")
-    ).filter(F.col("hamming") <= max_hamming)
-    return cacheutil.materialize_and_release(pairs, s)
-
-
-def probe_simhash_verify_order_ab(
-    spark, rounds: int = 3, sf_dir: str = "/root/testdata/sf0.1"
-) -> dict:
-    """Isolate the r12 verify-first simhash change (hamming filter
-    BEFORE the multi-chunk distinct) against the r11 distinct-first
-    ordering, interleaved min-of-N at registry parameters
-    (max_hamming=16 on sf documents).  Why: the r12/r11 bench pools
-    read simhash 1.19x at near-matched q6 floors, but the
-    behavior-identical siblings (minhash/ngram/contamination) read
-    1.13-1.29x in the SAME pools — pool minima cannot separate this
-    change from burst noise; adjacency can.  Raises unless both arms
-    emit the identical pair multiset."""
-    from pyspark.sql import functions as F
-
-    from hbase_tohdfs_spark.operators import dedup
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    variants = {
-        "r12_verify_first": lambda: dedup.simhash_dup_pairs(docs, max_hamming=16),
-        "r11_distinct_first": lambda: _simhash_pairs_r11_order(docs, 16),
-    }
-    times: dict = {v: [] for v in variants}
-    fingerprints: dict = {}
-    for _ in range(rounds):
-        for vname, fn in variants.items():
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            out = fn()
-            agg = out.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(
-                    F.hash("doc_id_a", "doc_id_b", "hamming").cast("long")
-                ).alias("h"),
-            ).collect()[0]
-            times[vname].append(round(time.perf_counter() - t0, 2))
-            fp = (int(agg["n"]), int(agg["h"]))
-            prev = fingerprints.setdefault(vname, fp)
-            if prev != fp:
-                raise RuntimeError(f"{vname} nondeterministic: {prev} vs {fp}")
-    if len(set(fingerprints.values())) != 1:
-        raise RuntimeError(f"pair sets differ across orderings: {fingerprints}")
-    mins = {v: min(ts) for v, ts in times.items()}
-    return {
-        "probe": "simhash_verify_order_ab",
-        "sf_dir": sf_dir,
-        "rounds": rounds,
-        "runs_sec": times,
-        "min_sec": mins,
-        "r12_over_r11": round(
-            mins["r12_verify_first"] / mins["r11_distinct_first"], 3
-        ),
-        "pairs_out": fingerprints["r12_verify_first"][0],
-    }
-
-
 def probe_contamination_growth(
     spark, n_docs: int, run_operator: bool = True
 ) -> dict:
@@ -734,153 +411,6 @@ def probe_contamination_growth(
             operator_sec=round(op_sec, 2),
         )
     return out
-
-
-def _components_loop_r11(pairs, hops: int = 3):
-    """The r11 connected_components loop, hard-coded as the A/B control
-    arm: edges ``distinct().persist()`` with no pinned
-    partitioning (re-exchanged every round — exchange reuse never
-    crosses actions), EAGER localCheckpoint + separate convergence count
-    (2 jobs/round).  Returns the labels frame; converged or raises."""
-    from pyspark.sql import functions as F
-
-    from hbase_tohdfs_spark.operators import cacheutil
-
-    spark = pairs.sparkSession
-    edges = pairs.select(
-        F.col("doc_id_a").alias("u"), F.col("doc_id_b").alias("v")
-    )
-    edges = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    edges = edges.distinct().persist()
-    try:
-        n_edges = edges.count()
-        loop_parts = cacheutil.clamped_partitions(spark, (n_edges // 500_000) + 1)
-        labels = (
-            edges.select(F.col("u").alias("lu"))
-            .distinct()
-            .withColumn("component", F.col("lu"))
-            .persist()
-        )
-        with cacheutil.scoped_shuffle_partitions(spark, loop_parts):
-            for it in range(25):
-                neighbor_min = (
-                    edges.join(labels, F.col("v") == F.col("lu"))
-                    .groupBy(F.col("u").alias("nu"))
-                    .agg(F.min("component").alias("nmin"))
-                )
-                stepped = (
-                    labels.join(neighbor_min, F.col("lu") == F.col("nu"), "left")
-                    .select(
-                        "lu",
-                        F.least(
-                            "component", F.coalesce("nmin", F.col("component"))
-                        ).alias("component"),
-                        (F.col("nmin") < F.col("component")).alias("chg"),
-                    )
-                    .persist()
-                )
-                if it >= 2:
-                    new_labels = stepped
-                    for _ in range(max(1, hops)):
-                        fa = new_labels.alias("fa")
-                        ptr = new_labels.select(
-                            F.col("lu").alias("plu"),
-                            F.col("component").alias("pcomp"),
-                        )
-                        new_labels = fa.join(
-                            ptr, F.col("fa.component") == F.col("plu"), "left"
-                        ).select(
-                            F.col("fa.lu").alias("lu"),
-                            F.coalesce("pcomp", F.col("fa.component")).alias(
-                                "component"
-                            ),
-                            (
-                                F.col("fa.chg")
-                                | (F.col("pcomp") < F.col("fa.component"))
-                            ).alias("chg"),
-                        )
-                else:
-                    new_labels = stepped
-                new_labels = new_labels.localCheckpoint()
-                changed = new_labels.filter(F.col("chg")).count()
-                stepped.unpersist()
-                labels.unpersist()
-                labels = new_labels
-                if changed == 0:
-                    return labels.select(F.col("lu").alias("doc_id"), "component")
-        raise RuntimeError("r11 control loop did not converge in 25 rounds")
-    finally:
-        edges.unpersist()
-
-
-def probe_components_loop_ab(
-    spark, rounds: int = 3, sf_dir: str | None = None, deep: bool = False
-) -> dict:
-    """r11 verdict task 4: the components LOOP A/B — the r12 loop
-    (edge set pinned ``repartition(loop_parts, "v")`` once, labels kept
-    hash-partitioned on ``lu`` across rounds, LAZY localCheckpoint so
-    the convergence count is the round's only job) vs the r11 loop
-    hard-coded above.  Pair generation is excluded: both arms consume
-    the SAME pre-materialized minhash pairs frame (registry parameters
-    at sf_dir, or the deep-chain synthetic when ``deep``).  Interleaved
-    per round; read RATIOS of minima.  Raises unless both arms produce
-    the identical (doc_id, component) set."""
-    from pyspark.sql import functions as F
-
-    from hbase_tohdfs_spark.operators import dedup
-
-    if deep:
-        # the path-halving stress shape from probe_components: 100k
-        # 10-node chains plus one 100k-diameter chain
-        chains = spark.range(900_000).selectExpr(
-            "id AS doc_id_a", "id + 1 AS doc_id_b"
-        ).filter("pmod(id, 10) != 9")
-        base = 10_000_000
-        long_chain = spark.range(100_000).selectExpr(
-            f"id + {base} AS doc_id_a", f"id + {base} + 1 AS doc_id_b"
-        )
-        pairs = chains.unionByName(long_chain).localCheckpoint()
-        label = "deep:1m"
-    else:
-        sf_dir = sf_dir or "/root/testdata/sf0.1"
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        pairs = dedup.minhash_dedup_pairs(docs, k=3, threshold=0.5)
-        label = f"sf:{sf_dir.rstrip('/').rsplit('/', 1)[-1]}"
-    variants = {
-        "r12": lambda: dedup.connected_components(pairs),
-        "r11": lambda: _components_loop_r11(pairs),
-    }
-    times: dict = {v: [] for v in variants}
-    fingerprints: dict = {}
-    for _ in range(rounds):
-        for vname, fn in variants.items():
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            out = fn()
-            agg = out.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.countDistinct("component").alias("c"),
-                F.sum(F.hash("doc_id", "component").cast("long")).alias("h"),
-            ).collect()[0]
-            times[vname].append(round(time.perf_counter() - t0, 2))
-            fp = (int(agg["n"]), int(agg["c"]), int(agg["h"]))
-            prev = fingerprints.setdefault(vname, fp)
-            if prev != fp:
-                raise RuntimeError(f"{vname} nondeterministic: {prev} vs {fp}")
-    if fingerprints["r11"] != fingerprints["r12"]:
-        raise RuntimeError(
-            f"label sets differ across loop variants: {fingerprints}"
-        )
-    mins = {v: min(ts) for v, ts in times.items()}
-    return {
-        "probe": f"components_loop_ab_{label}",
-        "rounds": rounds,
-        "runs_sec": times,
-        "min_sec": mins,
-        "r12_over_r11": round(mins["r12"] / mins["r11"], 3),
-        "labels_out": fingerprints["r12"][0],
-        "components_out": fingerprints["r12"][1],
-    }
 
 
 def probe_minhash(spark, n_docs: int) -> dict:
@@ -1374,18 +904,6 @@ def main() -> None:
     if which in ("ngram", "all"):
         print(json.dumps(probe_ngram(spark, 250_000)))
         print(json.dumps(probe_ngram(spark, 1_000_000)))
-    if which == "ngram_ab":
-        print(json.dumps(probe_ngram_ab(spark, 1_000_000)))
-    if which == "ngram_ab_smoke":
-        print(json.dumps(probe_ngram_ab(spark, 50_000, rounds=1)))
-    if which == "ngram_hash_ab":
-        print(json.dumps(probe_ngram_hash_ab(spark, 1_000_000)))
-    if which == "ngram_hash_ab_smoke":
-        print(json.dumps(probe_ngram_hash_ab(spark, 50_000, rounds=1)))
-    if which == "minhash_hash_ab":
-        print(json.dumps(probe_minhash_hash_ab(spark, 1_000_000)))
-    if which == "minhash_hash_ab_smoke":
-        print(json.dumps(probe_minhash_hash_ab(spark, 50_000, rounds=1)))
     if which in ("minhash", "all"):
         print(json.dumps(probe_minhash(spark, 250_000)))
         print(json.dumps(probe_minhash(spark, 1_000_000)))
@@ -1410,24 +928,12 @@ def main() -> None:
         print(json.dumps(probe_simhash_wide_growth(spark, 4_000_000)))
     if which == "simhash_wide_growth_smoke":
         print(json.dumps(probe_simhash_wide_growth(spark, 20_000)))
-    if which == "simhash_verify_order_ab":
-        print(json.dumps(probe_simhash_verify_order_ab(spark, rounds=3)))
-    if which == "simhash_verify_order_ab_smoke":
-        print(json.dumps(probe_simhash_verify_order_ab(
-            spark, rounds=1, sf_dir="/root/testdata/sf0.01")))
     if which == "contamination_growth":
         print(json.dumps(probe_contamination_growth(spark, 250_000)))
         print(json.dumps(probe_contamination_growth(spark, 1_000_000)))
         print(json.dumps(probe_contamination_growth(spark, 4_000_000)))
     if which == "contamination_growth_smoke":
         print(json.dumps(probe_contamination_growth(spark, 20_000)))
-    if which == "components_loop_ab":
-        print(json.dumps(probe_components_loop_ab(spark, rounds=3)))
-    if which == "components_loop_ab_deep":
-        print(json.dumps(probe_components_loop_ab(spark, rounds=2, deep=True)))
-    if which == "components_loop_ab_smoke":
-        print(json.dumps(probe_components_loop_ab(spark, rounds=1,
-                                                  sf_dir="/root/testdata/sf0.01")))
     if which in ("embedding", "all"):
         print(json.dumps(probe_embedding(spark, 1_200_000)))
         print(json.dumps(probe_embedding(spark, 2_400_000)))
